@@ -570,48 +570,63 @@ object Curate {
                   stopWords: Seq[String] =
                     Seq("the", "be", "to", "of", "and", "that", "have", "with"))
       : DataFrame = {
-    require(stopWords.nonEmpty, "gopherFlags needs a non-empty stop list")
-    val stopArr = array(stopWords.map(lit): _*)
-    // ONE fused codegen'd pass computes all eight statistics: the
-    // equivalent higher-order builtins (filter/transform/aggregate
-    // lambdas) are CodegenFallback in Spark — eight interpreted walks
-    // over every token array, which is real CPU at corpus scale.
-    // Kernel parity with the builtin composition is spec-gated.
-    docs
-      .withColumn("__gs",
-        graft.functions.gopher_stats(coalesce(col(textCol), lit("")), stopArr))
-      .withColumn("n_words", element_at(col("__gs"), 1))
-      .withColumn("__sumlen", element_at(col("__gs"), 2))
-      .withColumn("__alpha", element_at(col("__gs"), 3))
-      .withColumn("__sym", element_at(col("__gs"), 4))
-      .withColumn("__stop", element_at(col("__gs"), 5))
-      .withColumn("__nl", element_at(col("__gs"), 6))
-      .withColumn("__bullet", element_at(col("__gs"), 7))
-      .withColumn("__ell", element_at(col("__gs"), 8))
-      .select(
-        col(idCol).as("doc_id"),
-        col("n_words"),
-        (col("n_words") >= minWords && col("n_words") <= maxWords)
-          .cast("long").as("ok_words"),
-        // 3 <= mean word length <= 10, cross-multiplied
-        (col("__sumlen") >= col("n_words") * 3 &&
-          col("__sumlen") <= col("n_words") * 10)
-          .cast("long").as("ok_wordlen"),
-        // symbol-to-word ratio < 0.1
-        (col("__sym") * 10 < col("n_words")).cast("long").as("ok_symbols"),
-        // < 90% bullet lines, < 30% ellipsis lines
-        (col("__bullet") * 10 < col("__nl") * 9 &&
-          col("__ell") * 10 < col("__nl") * 3)
-          .cast("long").as("ok_lines"),
-        // >= 80% of words contain an alphabetic character
-        (col("__alpha") * 5 >= col("n_words") * 4).cast("long").as("ok_alpha"),
-        // at least two distinct stop words present
-        (col("__stop") >= 2).cast("long").as("ok_stopwords"))
-      .withColumn("keep",
-        (col("ok_words") * col("ok_wordlen") * col("ok_symbols") *
-          col("ok_lines") * col("ok_alpha") * col("ok_stopwords") === 1)
-          .cast("long"))
+    val rules = gopherRules(col("__gs"), minWords, maxWords)
+    withGopherStats(docs, textCol, stopWords)
+      .select(col(idCol).as("doc_id") +: element_at(col("__gs"), 1).as("n_words") +:
+        rules.map { case (n, c) => c.as(n) }: _*)
+      .withColumn("keep", gopherConjunction(rules.map(r => col(r._1))))
   }
+
+  /** [[gopherFlags]]' `keep` appended to `docs` as column `keepCol`
+    * (1 = the document passes all six rules): the row-local form a
+    * pipeline filters on, with no flags frame to join back. Both read
+    * the same [[gopherRules]]. */
+  def withGopherKeep(docs: DataFrame, textCol: String, keepCol: String,
+                     minWords: Int = 50, maxWords: Int = 100000,
+                     stopWords: Seq[String] =
+                       Seq("the", "be", "to", "of", "and", "that", "have", "with"))
+      : DataFrame =
+    withGopherStats(docs, textCol, stopWords)
+      .withColumn(keepCol, gopherConjunction(
+        gopherRules(col("__gs"), minWords, maxWords).map(_._2)))
+      .drop("__gs")
+
+  // ONE fused codegen'd pass computes all eight statistics into `__gs`:
+  // the equivalent higher-order builtins (filter/transform/aggregate
+  // lambdas) are CodegenFallback in Spark — eight interpreted walks
+  // over every token array, which is real CPU at corpus scale.
+  // Kernel parity with the builtin composition is spec-gated.
+  private def withGopherStats(docs: DataFrame, textCol: String,
+                              stopWords: Seq[String]): DataFrame = {
+    require(stopWords.nonEmpty, "gopherFlags needs a non-empty stop list")
+    docs.withColumn("__gs", graft.functions.gopher_stats(
+      coalesce(col(textCol), lit("")), array(stopWords.map(lit): _*)))
+  }
+
+  /** The six Gopher rules over the stats array `gs` (n_words, Σlen,
+    * alphabetic words, symbols, stop words, lines, bullet lines,
+    * ellipsis lines), each a 0/1 long. */
+  private def gopherRules(gs: Column, minWords: Int, maxWords: Int)
+      : Seq[(String, Column)] = {
+    val Seq(n, sumLen, alpha, sym, stop, nl, bullet, ell) =
+      (1 to 8).map(element_at(gs, _))
+    Seq(
+      "ok_words" -> (n >= minWords && n <= maxWords),
+      // 3 <= mean word length <= 10, cross-multiplied
+      "ok_wordlen" -> (sumLen >= n * 3 && sumLen <= n * 10),
+      // symbol-to-word ratio < 0.1
+      "ok_symbols" -> (sym * 10 < n),
+      // < 90% bullet lines, < 30% ellipsis lines
+      "ok_lines" -> (bullet * 10 < nl * 9 && ell * 10 < nl * 3),
+      // >= 80% of words contain an alphabetic character
+      "ok_alpha" -> (alpha * 5 >= n * 4),
+      // at least two distinct stop words present
+      "ok_stopwords" -> (stop >= 2)
+    ).map { case (name, c) => (name, c.cast("long")) }
+  }
+
+  private def gopherConjunction(rules: Seq[Column]): Column =
+    (rules.reduce(_ * _) === 1).cast("long")
 
   /** L52: token-blocklist filter — the C4 "bad words" pre-filter
     * (Raffel et al. 2020 §2.2, the List-of-Dirty-Naughty-Obscene-and-

@@ -70,6 +70,14 @@ object Lineage {
     } else df.localCheckpoint(eager = true)
   }
 
+  /** Set once an observed metric failed to arrive within
+    * [[observeWait]]: from then on every [[pinAgg]] in the process reads
+    * its aggregates from the pinned frame directly, so a delivery
+    * failure costs one wait, not one wait per round of every loop. */
+  @volatile private[graft] var observeUnreliable: Boolean = false
+
+  private val observeWait = scala.concurrent.duration.Duration(5, "s")
+
   /** r17: pin + read GLOBAL aggregates of the SAME materialization.
     * The engine's iterative loops all follow "pin the round, then run
     * one scalar action over the pinned blocks" (convergence count,
@@ -79,28 +87,44 @@ object Lineage {
     * DURING the pin's own action, so the scalar is free. Aggregates
     * must be aliased, global and distinct-free (the observe
     * contract). Falls back to an explicit aggregate over the pinned
-    * frame if metric delivery ever fails (defensive: delivery rides
-    * an async listener; verified on localCheckpoint and reliable
-    * checkpoint paths for this Spark, but a pinned-frame aggregate is
-    * always correct). */
+    * frame (always correct, one more job) when metric delivery, which
+    * rides an async listener, has not arrived within [[observeWait]]
+    * — after which [[observeUnreliable]] routes every later call
+    * straight to the fallback — or when the wait is interrupted (the
+    * interrupt is re-asserted once the fallback has run). */
   def pinAgg(df: DataFrame,
              aggs: (String, org.apache.spark.sql.Column)*): (DataFrame, Map[String, Any]) = {
     require(aggs.nonEmpty, "pinAgg needs >= 1 aggregate")
     val names = aggs.map(_._1)
     val aliased = aggs.map { case (n, c) => c.as(n) }
-    val obs = org.apache.spark.sql.Observation()
-    val pinned = pin(df.observe(obs, aliased.head, aliased.tail: _*))
-    val vals: Map[String, Any] =
-      try {
-        scala.concurrent.Await.ready(obs.future,
-          scala.concurrent.duration.Duration(60, "s"))
-        names.map(n => (n, obs.get(n))).toMap
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          val r = pinned.agg(aliased.head, aliased.tail: _*).head()
-          names.zipWithIndex.map { case (n, i) => (n, r.get(i)) }.toMap
-      }
-    (pinned, vals)
+    def fromPinned(pinned: DataFrame): Map[String, Any] = {
+      val r = pinned.agg(aliased.head, aliased.tail: _*).head()
+      names.zipWithIndex.map { case (n, i) => (n, r.get(i)) }.toMap
+    }
+    if (observeUnreliable) {
+      val pinned = pin(df)
+      (pinned, fromPinned(pinned))
+    } else {
+      val obs = org.apache.spark.sql.Observation()
+      val pinned = pin(df.observe(obs, aliased.head, aliased.tail: _*))
+      val vals: Map[String, Any] =
+        try {
+          scala.concurrent.Await.ready(obs.future, observeWait)
+          names.map(n => (n, obs.get(n))).toMap
+        } catch {
+          case _: java.util.concurrent.TimeoutException =>
+            observeUnreliable = true
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"observed metrics not delivered within $observeWait: pinAgg " +
+                "reads aggregates from the pinned frame from now on")
+            fromPinned(pinned)
+          case _: InterruptedException =>
+            val v = fromPinned(pinned)
+            Thread.currentThread().interrupt()
+            v
+        }
+      (pinned, vals)
+    }
   }
 
   private def scanShaped(p: LogicalPlan): Boolean = p match {

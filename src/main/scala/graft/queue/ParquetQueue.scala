@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.Comparator
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -159,6 +160,10 @@ class ParquetQueue(
     StructField("lifetime_ms", LongType, nullable = false) ::
     schema.sparkSchema.fields.toList)
 
+  /** The envelope as readers see it: plus the `batch` partition column
+    * (a segment's first seq). */
+  private val partitioned: StructType = envelope.add(StructField("batch", LongType))
+
   /** Next sequence number to be assigned (== total rows ever pushed). */
   def highwater: Long =
     if (Files.exists(highwaterFile))
@@ -174,50 +179,86 @@ class ParquetQueue(
 
   /** Append a batch (the journal-append primitive, unbounded like the
     * reference's `JournaledFile.push`; the capacity-honoring publisher
-    * API is [[tryPush]]/[[pushWait]]). Sequence numbers are assigned
-    * per-partition from a counted offset table (classic zipWithIndex
-    * two-pass) — no global shuffle, scales to any batch size. The
-    * validated payload is persisted for the duration of the push so the
-    * source is computed exactly once (a non-deterministic source can't
-    * disagree between the count and the written rows). Returns the
-    * number pushed.
+    * API is [[tryPush]]/[[pushWait]]). Two Spark jobs: the validated
+    * payload is persisted, and one sizing job over it both materializes
+    * the cache and collects each partition's row count; the
+    * write then assigns seqs per partition from the prefix sums of
+    * those counts — no global shuffle, no separate count, scales to any
+    * batch size. The source is evaluated exactly once, so a
+    * non-deterministic source can't disagree between the count and the
+    * written rows. Returns the number pushed.
     */
   def push(df: DataFrame, lifetimeMs: Long = -1L,
-           nowMs: Long = System.currentTimeMillis()): Long = mutex.synchronized {
+           nowMs: Long = System.currentTimeMillis()): Long = {
     ensureOpen()
-    completeStaged()
+    val sized = measure(df)
+    try mutex.synchronized(append(sized, lifetimeMs, nowMs))
+    finally sized.release()
+  }
+
+  /** A validated payload pinned in the cache, as the RDD both jobs of
+    * a push read, with that RDD's per-partition row counts: one
+    * evaluation of the source that the capacity checks and the write
+    * share. */
+  private final class Sized(payload: DataFrame, val rdd: RDD[Row],
+                            val partRows: Array[Long]) {
+    val rows: Long = partRows.sum
+    def release(): Unit = { payload.unpersist(); () }
+  }
+
+  /** The sizing pass: persist the validated payload and count each
+    * partition of its cached RDD in one job, which is also the job
+    * that materializes the cache. */
+  private def measure(df: DataFrame): Sized = {
     val payload = schema.validate(df).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val first = highwater
-      val n = payload.count() // materializes the cache; one source pass
-      if (n > 0) {
-        val rdd = payload.rdd.zipWithIndex().map { case (row, i) =>
-          Row.fromSeq((first + i) +: nowMs +: lifetimeMs +: row.toSeq)
+      val rdd = payload.rdd
+      val partRows = spark.sparkContext.runJob(rdd,
+        (it: Iterator[Row]) => { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n })
+      new Sized(payload, rdd, partRows)
+    } catch { case e: Throwable => payload.unpersist(); throw e }
+  }
+
+  /** The write half of a push; callers hold the mutex. */
+  private def append(sized: Sized, lifetimeMs: Long, nowMs: Long): Long = {
+    ensureOpen()
+    completeStaged()
+    val first = highwater
+    val n = sized.rows
+    if (n > 0) {
+      // partition p's rows take seqs [starts(p), starts(p) + partRows(p))
+      val starts = sized.partRows.scanLeft(first)(_ + _)
+      val rdd = sized.rdd.mapPartitionsWithIndex { (p, it) =>
+        var next = starts(p)
+        it.map { row =>
+          val r = Row.fromSeq(next +: nowMs +: lifetimeMs +: row.toSeq)
+          next += 1
+          r
         }
-        // Two-phase visibility: the segment is written under _staging
-        // (overwrite clears any orphan of a crashed predecessor at the
-        // same seq — it is uncommitted by definition), the highwater
-        // commit is the transaction point, and only THEN does the
-        // atomic rename make the files visible under data/. Readers —
-        // including the Structured Streaming file source, which tracks
-        // files by path and cannot re-read a path it has already seen —
-        // can therefore never observe uncommitted rows.
-        // per-segment codec = the reference's per-entry Codec (PLAIN/GZIP)
-        // generalized: parquet page compression (snappy/gzip/zstd/none)
-        val staged = stagingDir.resolve(s"batch=$first")
-        spark.createDataFrame(rdd, envelope)
-          .write.mode("overwrite").option("compression", codec)
-          .parquet(staged.toString)
-        commitHighwater(first + n)
-        val target = Paths.get(dataDir, s"batch=$first")
-        // a directory already at the target is a pre-staging-era torn
-        // write (its seqs start at the OLD highwater, so it was never
-        // committed) — clear it rather than failing the move
-        if (Files.exists(target)) deleteRecursively(target)
-        Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
       }
-      n
-    } finally payload.unpersist()
+      // Two-phase visibility: the segment is written under _staging
+      // (overwrite clears any orphan of a crashed predecessor at the
+      // same seq — it is uncommitted by definition), the highwater
+      // commit is the transaction point, and only THEN does the
+      // atomic rename make the files visible under data/. Readers —
+      // including the Structured Streaming file source, which tracks
+      // files by path and cannot re-read a path it has already seen —
+      // can therefore never observe uncommitted rows.
+      // per-segment codec = the reference's per-entry Codec (PLAIN/GZIP)
+      // generalized: parquet page compression (snappy/gzip/zstd/none)
+      val staged = stagingDir.resolve(s"batch=$first")
+      spark.createDataFrame(rdd, envelope)
+        .write.mode("overwrite").option("compression", codec)
+        .parquet(staged.toString)
+      commitHighwater(first + n)
+      val target = Paths.get(dataDir, s"batch=$first")
+      // a directory already at the target is a pre-staging-era torn
+      // write (its seqs start at the OLD highwater, so it was never
+      // committed) — clear it rather than failing the move
+      if (Files.exists(target)) deleteRecursively(target)
+      Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+    }
+    n
   }
 
   /** Crash recovery for the commit→move window: a staged segment whose
@@ -250,41 +291,38 @@ class ParquetQueue(
 
   /** tryPush semantics (reference Queue.scala:152): refuse when the
     * unconsumed backlog for `consumer` has reached capacity. The
-    * payload is persisted across the count AND the push, so the
-    * admission decision and the written rows come from one evaluation
-    * of the source (a non-deterministic source can't sneak past
-    * capacity between the two). */
+    * admission decision reads push's own sizing pass, so it and the
+    * written rows come from one evaluation of the source (a
+    * non-deterministic source can't sneak past capacity between the
+    * two). */
   def tryPush(df: DataFrame, consumer: String = "default",
               lifetimeMs: Long = -1L): Boolean = {
     ensureOpen()
-    val payload = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = payload.count() // Spark job outside the monitor
-      mutex.synchronized {
-        if (highwater - offsetOf(consumer) + n > capacity) false
-        else { push(payload, lifetimeMs); true } // reentrant
-      }
-    } finally payload.unpersist()
+    val sized = measure(df) // Spark job outside the monitor
+    try mutex.synchronized {
+      if (highwater - offsetOf(consumer) + sized.rows > capacity) false
+      else { append(sized, lifetimeMs, System.currentTimeMillis()); true }
+    } finally sized.release()
   }
 
   /** Blocking publisher push (reference Queue.scala:186-206): when the
     * unconsumed backlog is at capacity, poll until room frees up (the
     * capacity check is a metadata read — no Spark job per poll) or
     * `timeoutMs` elapses. Negative timeout waits forever. Returns
-    * whether the batch was accepted. */
+    * whether the batch was accepted. Sized once, like [[tryPush]]. */
   def pushWait(df: DataFrame, timeoutMs: Long = -1L,
                consumer: String = "default", lifetimeMs: Long = -1L,
                pollMs: Long = 200L): Boolean = {
     val t0 = System.nanoTime()
-    val payload = df.persist(StorageLevel.MEMORY_AND_DISK)
+    ensureOpen()
+    val sized = measure(df)
     try {
-      val n = payload.count()
       while (true) {
         ensureOpen()
         // capacity check + push atomic; the wait happens lock-free
         val accepted = mutex.synchronized {
-          if (highwater - offsetOf(consumer) + n <= capacity) {
-            push(payload, lifetimeMs); true
+          if (highwater - offsetOf(consumer) + sized.rows <= capacity) {
+            append(sized, lifetimeMs, System.currentTimeMillis()); true
           } else false
         }
         if (accepted) return true
@@ -293,7 +331,7 @@ class ParquetQueue(
         Thread.sleep(pollMs)
       }
       false
-    } finally payload.unpersist()
+    } finally sized.release()
   }
 
   /** pushAll semantics (reference Queue.scala:216): accept as many
@@ -343,8 +381,7 @@ class ParquetQueue(
   /** All live (uncommitted-batches excluded) rows with envelope. */
   def journal: DataFrame =
     if (!hasData) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      envelope.add(StructField("batch", LongType)))
+      spark.sparkContext.emptyRDD[Row], partitioned)
     else spark.read.option("basePath", dataDir).parquet(dataDir)
       .filter(col("seq") < highwater) // ignore torn/uncommitted appends
 
@@ -620,7 +657,10 @@ class ParquetQueue(
     * loop) becomes a declarative stream. */
   def readStream(maxBatchesPerTrigger: Int = 8): DataFrame =
     spark.readStream
-      .schema(envelope)
+      // the `batch` partition column is declared, not inferred: a stream
+      // started on an empty queue fixes its schema before any `batch=`
+      // directory exists, and would otherwise reject the first segment
+      .schema(partitioned)
       .option("basePath", dataDir)
       .option("maxFilesPerTrigger", maxBatchesPerTrigger)
       .parquet(dataDir)

@@ -1472,16 +1472,8 @@ object QueueStreaming {
     incoming.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import graft.operators.Dedup
-        val b = batch.toDF()
-        val corpusDups = Dedup
-          .minhashAgainstTable(b, idCol, textCol, sigTable,
-            k = k, bands = bands, minJaccard = minJaccard)
-          .filter(col("incoming_id") =!= col("corpus_id"))
-          .select(col("incoming_id").as("__dup_id")).distinct()
-        val fresh = b.join(corpusDups, b(idCol) === col("__dup_id"), "left_anti")
-        val withinPairs = Dedup.minhashPairs(fresh, idCol, textCol,
-          k = k, bands = bands, minJaccard = minJaccard)
-        val kept = Dedup.removeNearDups(fresh, idCol, withinPairs)
+        val kept = dedupAgainstTable(batch.toDF(), idCol, textCol, sigTable,
+            minJaccard, k, bands)
           .persist()
         try {
           kept.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
@@ -1492,10 +1484,32 @@ object QueueStreaming {
       .option("checkpointLocation", checkpoint)
       .start()
 
+  /** The near-dup stage of [[nearDupIngest]] and [[pipelineStream]]:
+    * drop the batch rows that MinHash-match the signature table (other
+    * than their own earlier append), then greedily near-dedup the
+    * survivors within the batch. The survivors are pinned once: the
+    * within-batch pairs and the removal both read them, and unpinned
+    * they would re-run the probe's bucketed scan of the signature table
+    * per reference. */
+  private def dedupAgainstTable(b: DataFrame, idCol: String, textCol: String,
+                                sigTable: String, minJaccard: Double, k: Int,
+                                bands: Int): DataFrame = {
+    import graft.operators.Dedup
+    val corpusDups = Dedup
+      .minhashAgainstTable(b, idCol, textCol, sigTable,
+        k = k, bands = bands, minJaccard = minJaccard)
+      .filter(col("incoming_id") =!= col("corpus_id"))
+      .select(col("incoming_id").as("__dup_id")).distinct()
+    val fresh = b.join(corpusDups, b(idCol) === col("__dup_id"), "left_anti")
+      .transform(graft.operators.Lineage.pin)
+    Dedup.removeNearDups(fresh, idCol, Dedup.minhashPairs(fresh, idCol, textCol,
+      k = k, bands = bands, minJaccard = minJaccard))
+  }
+
   /** C13ak: streaming COMPOSED curation pipeline — the L111 batch
     * composition's ingest form. Each micro-batch runs the per-doc
     * stage chain in pipeline order: (1) Gopher rule battery
-    * (map-side, the [[curationGateStream]] stage); (2) near-dup
+    * (map-side, [[graft.operators.Curate.withGopherKeep]]); (2) near-dup
     * ingest against the persisted MinHash signature state + greedy
     * within-batch dedup (the [[nearDupIngest]] discipline — ids
     * non-decreasing across triggers, so streamed greedy keep equals
@@ -1508,7 +1522,13 @@ object QueueStreaming {
     * funnel frame (stage_idx, stage, n_docs) commits beside the data
     * (`outPath/funnel/batch=N`) — the L111 observability contract,
     * summable across batches because every stage statistic is a
-    * plain count. Replay-safe: both outputs are own-partition
+    * plain count. Each count is observed during its stage's own pin
+    * ([[graft.operators.Lineage.pinAgg]]): the batch pin carries the
+    * Gopher keep flag as a row-local column and yields both the ingest
+    * and the Gopher count, so the trigger runs no trailing count job
+    * and no flags join; the probe survivors are pinned once, so the
+    * probe's scan of the signature table runs once per trigger.
+    * Replay-safe: both outputs are own-partition
     * overwrites; a replayed signature append collapses in the probe's
     * candidate distinct. Mixture weights and packing stay downstream
     * consumers ([[mixtureReweightStream]], [[packStream]]) — they are
@@ -1524,50 +1544,42 @@ object QueueStreaming {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.{Curate, Dedup}
+        import graft.operators.{Curate, Dedup, Lineage}
         val spark = batch.sparkSession
-        val b = batch.toDF().transform(graft.operators.Lineage.pin)
-        // stage 1: Gopher battery
-        val keep = Curate.gopherFlags(b, idCol, textCol,
-            stopWords = stopWords)
-          .filter(col("keep") === 1).select(col("doc_id").as(idCol))
-        val g = b.join(keep, Seq(idCol))
-          .transform(graft.operators.Lineage.pin)
+        // stage 1: Gopher battery, a row-local flag on the batch pin,
+        // whose own action also observes the ingest and gopher counts
+        val (b, bv) = Lineage.pinAgg(
+          Curate.withGopherKeep(batch.toDF(), textCol, "__gk",
+              stopWords = stopWords)
+            .withColumn("__gk", col("__gk") === 1 && col(idCol).isNotNull),
+          "n" -> count(lit(1)), "gopher" -> count(when(col("__gk"), 1)))
+        // id first, as the flags join this filter replaces laid it out
+        val g = b.filter(col("__gk"))
+          .select((idCol +: b.columns.toSeq.filterNot(Set(idCol, "__gk"))).map(col): _*)
         // stage 2: near-dup ingest (corpus state probe + within-batch)
-        val corpusDups = Dedup
-          .minhashAgainstTable(g, idCol, textCol, sigTable,
-            k = k, bands = bands, minJaccard = minJaccard)
-          .filter(col("incoming_id") =!= col("corpus_id"))
-          .select(col("incoming_id").as("__dup_id")).distinct()
-        val fresh = g.join(corpusDups, g(idCol) === col("__dup_id"),
-          "left_anti")
-        val deduped = Dedup.removeNearDups(fresh, idCol,
-            Dedup.minhashPairs(fresh, idCol, textCol,
-              k = k, bands = bands, minJaccard = minJaccard))
-          .transform(graft.operators.Lineage.pin)
+        val (deduped, dv) = Lineage.pinAgg(
+          dedupAgainstTable(g, idCol, textCol, sigTable, minJaccard, k, bands),
+          "n" -> count(lit(1)))
         // stage 3: winnow decontamination vs the frozen suite
         val flagged = Dedup.winnowedAgainst(deduped, idCol, textCol,
             eval, idCol, textCol, winK, winW, minShared, maxDf)
           .select(col("id").as("__c_id")).distinct()
-        val kept = deduped
-          .join(flagged, deduped(idCol) === col("__c_id"), "left_anti")
-          .persist()
-        try {
-          kept.write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId")
-          Dedup.appendSignatures(kept, idCol, textCol, sigTable,
-            k = k, bands = bands, buckets = buckets)
-          // funnel accounting: one bounded action over the pinned
-          // stage frames (each already materialized above)
-          val counts = Seq(
-            (0L, "ingest", b.count()), (1L, "gopher", g.count()),
-            (2L, "dedup_ingest", deduped.count()),
-            (3L, "decontam_winnow", kept.count()))
-          import spark.implicits._
-          counts.toDF("stage_idx", "stage", "n_docs")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/funnel/batch=$batchId")
-        } finally { kept.unpersist(); () }
+        val (kept, kv) = Lineage.pinAgg(
+          deduped.join(flagged, deduped(idCol) === col("__c_id"), "left_anti"),
+          "n" -> count(lit(1)))
+        kept.write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId")
+        Dedup.appendSignatures(kept, idCol, textCol, sigTable,
+          k = k, bands = bands, buckets = buckets)
+        val counts = Seq(
+            (0L, "ingest", bv("n")), (1L, "gopher", bv("gopher")),
+            (2L, "dedup_ingest", dv("n")), (3L, "decontam_winnow", kv("n")))
+          .map { case (i, stage, n) => (i, stage, n.asInstanceOf[Long]) }
+        import spark.implicits._
+        counts.toDF("stage_idx", "stage", "n_docs")
+          .coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"$outPath/funnel/batch=$batchId")
+        ()
       }
       .option("checkpointLocation", checkpoint)
       .start()

@@ -1992,4 +1992,25 @@ class CurationSpec extends SparkSpec {
       800, 100).collect().map(r => r.getLong(0) -> r.getString(4)).toMap
     out.foreach(r => assert(again(r.getLong(0)) == r.getString(4)))
   }
+
+  test("withGopherKeep equals gopherFlags' keep, row for row") {
+    import graft.operators.Curate
+    val d = table("documents")
+    val outcomes = Seq((Seq("the", "a"), 50), (Seq("the", "a"), 10),
+        (Seq("the", "be", "to", "of", "and", "that", "have", "with"), 50))
+      .flatMap { case (stops, minWords) =>
+        val flags = Curate.gopherFlags(d, "doc_id", "text", minWords = minWords,
+            stopWords = stops)
+          .select(col("doc_id"), col("keep"))
+        val rowLocal = Curate.withGopherKeep(d, "text", "k", minWords = minWords,
+            stopWords = stops)
+          .select(col("doc_id"), col("k"))
+        val got = rowLocal.join(flags, "doc_id").collect()
+        assert(got.length.toLong == d.count())
+        assert(got.forall(r => r.getLong(1) == r.getLong(2)),
+          s"row-local keep diverged from gopherFlags ($stops, $minWords)")
+        got.map(_.getLong(2))
+      }
+    assert(outcomes.toSet == Set(0L, 1L), "the fixture exercises both outcomes")
+  }
 }

@@ -500,4 +500,20 @@ class ObserveSpec extends SparkSpec {
       Observe.groupedWinsorize(rows, "g", "v", 990000L, 10000L)
     }
   }
+
+  test("pinAgg's pinned-frame fallback yields the observed values") {
+    import graft.operators.Lineage
+    val df = spark.range(0, 1000, 1, 4).withColumn("v", col("id") % 7)
+    def aggs = Seq("n" -> count(lit(1)), "s" -> sum("v"), "m" -> max("id"))
+    val (p1, observed) = Lineage.pinAgg(df, aggs: _*)
+    val was = Lineage.observeUnreliable
+    Lineage.observeUnreliable = true // as after a delivery timeout
+    val (p2, fallback) =
+      try Lineage.pinAgg(df, aggs: _*)
+      finally Lineage.observeUnreliable = was
+    assert(observed == Map("n" -> 1000L, "s" -> df.agg(sum("v")).head().getLong(0),
+      "m" -> 999L))
+    assert(fallback == observed)
+    assert(p2.count() == 1000L && p1.count() == 1000L)
+  }
 }

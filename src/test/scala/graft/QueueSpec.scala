@@ -783,6 +783,100 @@ class QueueSpec extends SparkSpec {
     assert(q.pop(10).map(_.getLong(0)) == Seq(1L, 2L, 3L, 4L, 5L))
     q.dispose()
   }
+
+  test("push assigns contiguous FIFO seqs across 7 partitions, some empty") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val q = fresh()
+    q.push(Seq((0L, "head")).toDF("id", "text"))
+    // three hash keys over seven partitions: at least four are empty;
+    // each row carries the partition it was pushed from
+    val df = spark.range(1, 31).repartition(7, col("id") % 3)
+      .select(col("id"), spark_partition_id().cast("string").as("text"))
+    assert(df.rdd.getNumPartitions == 7)
+    assert(q.push(df) == 30L && q.highwater == 31L)
+    val rows = q.journal.orderBy("seq").collect()
+    assert(rows.map(_.getAs[Long]("seq")).toSeq == (0L until 31L),
+      "seqs are contiguous from the previous highwater")
+    val parts = rows.drop(1).map(_.getAs[String]("text").toInt)
+    assert(parts.distinct.length < 7, "the payload had empty partitions")
+    assert(parts.toSeq == parts.sorted.toSeq,
+      "FIFO order follows the payload's partition order")
+    assert(rows.drop(1).map(_.getAs[Long]("id")).sorted.toSeq == (1L to 30L))
+    assert(q.pop(100).map(_.getLong(0)) == rows.map(_.getAs[Long]("id")).toSeq)
+    q.dispose()
+  }
+
+  test("a random source writes exactly the rows push counted") {
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    // rand() is seeded when the plan is built, so re-running a plan
+    // repeats its draws; this coin differs on every evaluation
+    val coin = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextBoolean())
+      .asNondeterministic()
+    val src = spark.range(0, 400, 1, 4).filter(coin())
+      .select(col("id"), lit("r").as("text"))
+    def written(q: ParquetQueue) = q.journal.select("seq").as[Long].collect().sorted.toSeq
+    val q = fresh()
+    val n = q.push(src)
+    assert(q.highwater == n && written(q) == (0L until n),
+      s"counted $n, wrote seqs that are not exactly 0 until $n")
+    // the capacity-checked publishers size the payload in the same pass
+    val bounded = fresh(capacity = 1000)
+    assert(bounded.tryPush(src) && bounded.pushWait(src, timeoutMs = 0L))
+    assert(written(bounded) == (0L until bounded.highwater))
+    q.dispose(); bounded.dispose()
+  }
+
+  test("push runs at most 2 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val q = fresh()
+    val tag = "graft.test.push"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "push")
+      q.push(spark.range(0, 1000, 1, 3).selectExpr("id", "CAST(id AS STRING) AS text"))
+      // the listener bus delivers in order: once the marker job is
+      // seen, every job of the push has been counted
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val t0 = System.nanoTime()
+      while (!jobs.contains("marker") && System.nanoTime() - t0 < 30000000000L)
+        Thread.sleep(20)
+      assert(jobs.contains("marker"))
+      val pushJobs = jobs.toArray.count(_ == "push")
+      assert(pushJobs <= 2, s"push ran $pushJobs jobs")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+      q.dispose()
+    }
+  }
+
+  test("a subscriber started on an empty queue sees both later pushes in order") {
+    import org.apache.spark.sql.streaming.Trigger
+    val q = fresh()
+    val ckpt = Files.createTempDirectory("qempty_ckpt").toString
+    val query = q.readStream().writeStream.format("memory")
+      .queryName("qempty").option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(0L)).start()
+    try {
+      query.processAllAvailable()
+      q.push(Seq((1L, "a"), (2L, "b")).toDF("id", "text"))
+      query.processAllAvailable()
+      q.push(Seq((3L, "c")).toDF("id", "text"))
+      query.processAllAvailable()
+      assert(query.exception.isEmpty)
+      val seen = spark.sql("SELECT seq, id, batch FROM qempty ORDER BY seq")
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(seen == Seq((0L, 1L, 0L), (1L, 2L, 0L), (2L, 3L, 2L)))
+    } finally { query.stop(); q.dispose() }
+  }
 }
 
 // top-level so implicit product encoders derive cleanly
